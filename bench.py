@@ -140,7 +140,11 @@ def bench_zipf_joins(
     import statistics
     import tempfile
 
-    from mapreduce_join_comparison_spark.generator import generate_zipf_pair
+    from mapreduce_join_comparison_spark.generator import (
+        ZIPF_STAGE_CHUNK_ROWS,
+        generate_dim,
+        stage_zipf_fact_chunked,
+    )
     from mapreduce_join_comparison_spark.operators.joins import equi_join
     from mapreduce_join_comparison_spark.session import (
         LOCAL_SKEW_CONF,
@@ -152,11 +156,15 @@ def bench_zipf_joins(
     stage = tempfile.mkdtemp(prefix="bench_zipf_")
     try:
         tg = time.monotonic()
-        dim, fact = generate_zipf_pair(
-            spark, n_rows, max(1, n_rows // 10), s=skew, seed=42
+        # one write job up to ZIPF_STAGE_CHUNK_ROWS; past it, chunks
+        # bound the driver's Zipf run table (generator.py)
+        stage_zipf_fact_chunked(
+            spark, n_rows, max(1, n_rows // 10), skew,
+            os.path.join(stage, "fact"), seed=42,
+            chunks=-(-n_rows // ZIPF_STAGE_CHUNK_ROWS),
         )
-        fact.write.parquet(os.path.join(stage, "fact"))
-        dim.write.parquet(os.path.join(stage, "dim"))
+        generate_dim(spark, max(1, n_rows // 10), seed=42) \
+            .write.parquet(os.path.join(stage, "dim"))
         detail["generate_stage_sec"] = round(time.monotonic() - tg, 3)
         if n_rows >= 30_000_000:
             # release the generator's own shuffle files before the

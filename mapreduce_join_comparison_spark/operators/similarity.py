@@ -461,13 +461,14 @@ def train_ivf_centroids(
     Lloyd iterations run driver-side in numpy — the one deliberate
     driver-side computation in this module, justified because its input
     is O(sample), never O(corpus)."""
-    # no corpus.count() sizing pass: a fixed-fraction sample feeds an
-    # incremental limit (CollectLimit launches partitions in waves), so
-    # the one action reads only as much of the corpus as the limit
-    # needs — a pre-count would cost a wasted full scan at 100 TB
+    # the sample is the sample_rows vectors with the smallest
+    # xxhash64(vec, seed), ties broken by the vector: a function of the
+    # corpus content alone, so the partition count and the core count
+    # cannot change it, and a non-empty corpus never samples to nothing.
+    # One scan; the top-K keeps at most sample_rows rows per partition.
     sample = (
         corpus.select(vec_col)
-        .sample(fraction=0.5, seed=seed)
+        .orderBy(F.xxhash64(vec_col, F.lit(seed)), vec_col)
         .limit(sample_rows)
         .collect()
     )

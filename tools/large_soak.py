@@ -59,8 +59,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 from bench import calibration_anchor, materialize  # noqa: E402
 from mapreduce_join_comparison_spark.generator import (  # noqa: E402
+    ZIPF_STAGE_CHUNK_ROWS,
     generate_dim,
-    generate_zipf_pair,
+    stage_zipf_fact_chunked,
 )
 from mapreduce_join_comparison_spark.operators.joins import (  # noqa: E402
     equi_join,
@@ -125,11 +126,16 @@ def main() -> int:
 
     os.makedirs(args.stage, exist_ok=True)
     t0 = time.monotonic()
-    dim, fact = generate_zipf_pair(
-        spark, args.rows, max(1, args.rows // 10), s=args.skew, seed=42
+    # the fact stages in chunks that append, so clear an earlier run's;
+    # chunking bounds the driver's Zipf run table (generator.py)
+    shutil.rmtree(os.path.join(args.stage, "fact"), ignore_errors=True)
+    stage_zipf_fact_chunked(
+        spark, args.rows, max(1, args.rows // 10), args.skew,
+        os.path.join(args.stage, "fact"), seed=42,
+        chunks=-(-args.rows // ZIPF_STAGE_CHUNK_ROWS),
     )
-    fact.write.mode("overwrite").parquet(os.path.join(args.stage, "fact"))
-    dim.write.mode("overwrite").parquet(os.path.join(args.stage, "dim"))
+    generate_dim(spark, max(1, args.rows // 10), seed=42) \
+        .write.mode("overwrite").parquet(os.path.join(args.stage, "dim"))
     record["generate_stage_sec"] = round(time.monotonic() - t0, 3)
     record["staged_fact_gb"] = _du_gb(os.path.join(args.stage, "fact"))
     record["staged_dim_gb"] = _du_gb(os.path.join(args.stage, "dim"))
